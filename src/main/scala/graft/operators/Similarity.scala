@@ -44,15 +44,6 @@ object Similarity {
       zip_with(a, b, (x, y) => floor(x.cast("double") * y.cast("double") * lit(DotScale))),
       lit(0L), _ + _)
 
-  /** [[dotFixed]] unrolled for a known dimension. Measured SLOWER than
-    * the fused zip_with/aggregate loop at dims=64 (the wide expression
-    * tree drops out of whole-stage codegen), so the operators default to
-    * the generic path (dims = -1); kept for small-dims cases.
-    */
-  def dotFixedUnrolled(a: Column, b: Column, dims: Int): Column =
-    (0 until dims).map { i =>
-      floor(a.getItem(i).cast("double") * b.getItem(i).cast("double") * lit(DotScale))
-    }.reduce(_ + _)
   def sqlDotFixed(aE: String, bE: String): String =
     s"CAST(list_sum([CAST(floor(CAST($aE[i] AS DOUBLE) * CAST($bE[i] AS DOUBLE) * ${DotScale.toLong}.0) AS BIGINT) " +
       s"for i in range(1, len($aE) + 1)]) AS BIGINT)"
@@ -70,29 +61,21 @@ object Similarity {
   /** Vectors with their fixed-point self-dot (squared norm) precomputed —
     * norms are per-vector, so they're computed once, not per pair.
     */
-  def withNormFixed(df: DataFrame, idCol: String, embCol: String,
-                    dims: Int = -1): DataFrame =
+  def withNormFixed(df: DataFrame, idCol: String, embCol: String): DataFrame =
     df.select(col(idCol).as("id"), col(embCol).as("emb"),
-      dotF(col(embCol), col(embCol), dims).as("norm_f"))
-
-  /** All paths use the native fused kernel now — it beats both the
-    * generic HOF and the unrolled expression tree at every dims (the
-    * unrolled tree additionally bloats plans and falls out of codegen).
-    * `dims` is kept in the signature for call-site documentation.
-    */
-  private def dotF(a: Column, b: Column, dims: Int): Column = dotFixed(a, b)
+      dotFixed(col(embCol), col(embCol)).as("norm_f"))
 
   /** Brute-force exact cosine top-k: queries × vectors scan, per-query
     * ranked window. `queries` should be small (broadcast side).
     */
   def knnBrute(vectors: DataFrame, idCol: String, embCol: String,
-               queryPred: Column, k: Int, dims: Int = -1): DataFrame = {
-    val v = withNormFixed(vectors, idCol, embCol, dims)
+               queryPred: Column, k: Int): DataFrame = {
+    val v = withNormFixed(vectors, idCol, embCol)
     val q = v.filter(queryPred)
       .select(col("id").as("q_id"), col("emb").as("q_emb"), col("norm_f").as("q_norm"))
     val scored = v.join(broadcast(q), col("id") =!= col("q_id"))
       .select(col("q_id"), col("id").as("n_id"),
-        cosineFromFixed(dotF(col("q_emb"), col("emb"), dims), col("q_norm"), col("norm_f"))
+        cosineFromFixed(dotFixed(col("q_emb"), col("emb")), col("q_norm"), col("norm_f"))
           .as("cosine"))
     val w = Window.partitionBy("q_id").orderBy(desc("cosine"), asc("n_id"))
     scored.withColumn("rank", row_number().over(w))
@@ -287,14 +270,14 @@ object Similarity {
   /** LSH-bucketed approximate top-k: candidates share the query's bucket. */
   def knnLsh(vectors: DataFrame, idCol: String, embCol: String,
              queryPred: Column, k: Int, planes: Int, dims: Int): DataFrame = {
-    val v = withBucket(withNormFixed(vectors, idCol, embCol, dims), "emb", planes, dims)
+    val v = withBucket(withNormFixed(vectors, idCol, embCol), "emb", planes, dims)
     val q = v.filter(queryPred)
       .select(col("id").as("q_id"), col("emb").as("q_emb"),
         col("norm_f").as("q_norm"), col("bucket").as("q_bucket"))
     val scored = v.join(broadcast(q),
         col("bucket") === col("q_bucket") && col("id") =!= col("q_id"))
       .select(col("q_id"), col("id").as("n_id"),
-        cosineFromFixed(dotF(col("q_emb"), col("emb"), dims), col("q_norm"), col("norm_f"))
+        cosineFromFixed(dotFixed(col("q_emb"), col("emb")), col("q_norm"), col("norm_f"))
           .as("cosine"))
     val w = Window.partitionBy("q_id").orderBy(desc("cosine"), asc("n_id"))
     scored.withColumn("rank", row_number().over(w))
@@ -1055,7 +1038,7 @@ object Similarity {
   def knnLshMultiProbe(vectors: DataFrame, idCol: String, embCol: String,
                        queryPred: Column, k: Int, planes: Int,
                        dims: Int): DataFrame = {
-    val v = withBucket(withNormFixed(vectors, idCol, embCol, dims), "emb", planes, dims)
+    val v = withBucket(withNormFixed(vectors, idCol, embCol), "emb", planes, dims)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val q = v.filter(queryPred)
       .select(col("id").as("q_id"), col("emb").as("q_emb"),
@@ -1066,7 +1049,7 @@ object Similarity {
     val scored = v.join(broadcast(q),
         col("bucket") === col("probe") && col("id") =!= col("q_id"))
       .select(col("q_id"), col("id").as("n_id"),
-        cosineFromFixed(dotF(col("q_emb"), col("emb"), dims),
+        cosineFromFixed(dotFixed(col("q_emb"), col("emb")),
           col("q_norm"), col("norm_f")).as("cosine"))
     val w = Window.partitionBy("q_id").orderBy(desc("cosine"), asc("n_id"))
     scored.withColumn("rank", row_number().over(w))
@@ -1082,8 +1065,7 @@ object Similarity {
     * sums, so the result is independent of partitioning/order. Centroids
     * collect to the driver between rounds — k×dims floats, the model
     * state a real IVF index ships — which also resets lineage per round.
-    * Empty clusters keep their previous centroid. Returns (c_id, c_emb)
-    * for [[knnIvfTrained]].
+    * Empty clusters keep their previous centroid. Returns (c_id, c_emb).
     */
   def trainIvfCentroids(vectors: DataFrame, idCol: String, embCol: String,
                         k: Int, iters: Int,
@@ -1436,36 +1418,24 @@ object Similarity {
     }.reduce(_ unionByName _)
   }
 
-  /** [[knnIvf]] against an externally-trained centroid table (c_id, c_emb)
-    * — e.g. [[trainIvfCentroids]] output.
-    */
-  def knnIvfTrained(vectors: DataFrame, idCol: String, embCol: String,
-                    centroids: DataFrame, queryPred: Column, k: Int,
-                    nprobe: Int, dims: Int = -1): DataFrame = {
-    val v = withNormFixed(vectors, idCol, embCol, dims)
-    val cent = centroids.select(col("c_id"), col("c_emb"),
-      dotF(col("c_emb"), col("c_emb"), dims).as("c_norm"))
-    ivfSearch(v, cent, queryPred, k, nprobe, dims)
-  }
-
   /** IVF top-k: assign every vector to its nearest centroid (given
     * centroid set), probe the `nprobe` nearest centroids per query, and
     * search only vectors in those clusters.
     */
   def knnIvf(vectors: DataFrame, idCol: String, embCol: String,
-             centroidPred: Column, queryPred: Column, k: Int, nprobe: Int,
-             dims: Int = -1): DataFrame = {
-    val v = withNormFixed(vectors, idCol, embCol, dims)
+             centroidPred: Column, queryPred: Column, k: Int,
+             nprobe: Int): DataFrame = {
+    val v = withNormFixed(vectors, idCol, embCol)
     val cent = v.filter(centroidPred)
       .select(col("id").as("c_id"), col("emb").as("c_emb"), col("norm_f").as("c_norm"))
-    ivfSearch(v, cent, queryPred, k, nprobe, dims)
+    ivfSearch(v, cent, queryPred, k, nprobe)
   }
 
   private def ivfSearch(v: DataFrame, cent: DataFrame, queryPred: Column,
-                        k: Int, nprobe: Int, dims: Int): DataFrame = {
+                        k: Int, nprobe: Int): DataFrame = {
     val affinity = v.crossJoin(broadcast(cent))
       .select(col("id"), col("emb"), col("norm_f"), col("c_id"),
-        cosineFromFixed(dotF(col("emb"), col("c_emb"), dims), col("norm_f"), col("c_norm"))
+        cosineFromFixed(dotFixed(col("emb"), col("c_emb")), col("norm_f"), col("c_norm"))
           .as("c_cos"))
     val wAssign = Window.partitionBy("id").orderBy(desc("c_cos"), asc("c_id"))
     val assigned = affinity.withColumn("crn", row_number().over(wAssign))
@@ -1479,7 +1449,7 @@ object Similarity {
     val scored = assigned.join(broadcast(probes),
         assigned("cluster") === probes("cluster") && col("id") =!= col("q_id"))
       .select(col("q_id"), col("id").as("n_id"),
-        cosineFromFixed(dotF(col("q_emb"), col("emb"), dims), col("q_norm"), col("norm_f"))
+        cosineFromFixed(dotFixed(col("q_emb"), col("emb")), col("q_norm"), col("norm_f"))
           .as("cosine"))
       .distinct() // a neighbor can sit in two probed clusters
     val w = Window.partitionBy("q_id").orderBy(desc("cosine"), asc("n_id"))
@@ -1530,21 +1500,20 @@ object Similarity {
     * keeps k ∝ n linear (measured 1.2×/7.6× per 10×).
     */
   def semDedupRemovals(vectors: DataFrame, idCol: String, embCol: String,
-                       centroidPred: Column, threshold: Double,
-                       dims: Int = -1): DataFrame = {
-    val v = withNormFixed(vectors, idCol, embCol, dims)
+                       centroidPred: Column, threshold: Double): DataFrame = {
+    val v = withNormFixed(vectors, idCol, embCol)
     val cent = v.filter(centroidPred)
       .select(col("id").as("c_id"), col("emb").as("c_emb"), col("norm_f").as("c_norm"))
     val wAssign = Window.partitionBy("id").orderBy(desc("c_cos"), asc("c_id"))
     // assignment feeds both self-join sides — materialize it once
     val assigned = v.crossJoin(broadcast(cent))
       .select(col("id"), col("emb"), col("norm_f"), col("c_id"),
-        cosineFromFixed(dotF(col("emb"), col("c_emb"), dims), col("norm_f"), col("c_norm"))
+        cosineFromFixed(dotFixed(col("emb"), col("c_emb")), col("norm_f"), col("c_norm"))
           .as("c_cos"))
       .withColumn("crn", row_number().over(wAssign))
       .filter(col("crn") === 1)
       .select(col("id"), col("emb"), col("norm_f"), col("c_id").as("cluster"))
-    pruneWithinClusters(assigned, threshold, dims)
+    pruneWithinClusters(assigned, threshold)
   }
 
   /** Shared SemDeDup tail: within-cluster threshold pairs → duplicate
@@ -1552,15 +1521,15 @@ object Similarity {
     * id kept per group. `assigned` must carry (id, emb, norm_f, cluster)
     * and is persisted here because both self-join sides consume it.
     */
-  private def pruneWithinClusters(assigned0: DataFrame, threshold: Double,
-                                  dims: Int): DataFrame = {
+  private def pruneWithinClusters(assigned0: DataFrame,
+                                  threshold: Double): DataFrame = {
     val assigned = assigned0
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val pairs = assigned.as("a")
       .join(assigned.as("b"),
         col("a.cluster") === col("b.cluster") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        cosineFromFixed(dotF(col("a.emb"), col("b.emb"), dims),
+        cosineFromFixed(dotFixed(col("a.emb"), col("b.emb")),
           col("a.norm_f"), col("b.norm_f")).as("cosine"))
       .filter(col("cosine") >= threshold)
       .select("id_a", "id_b")
@@ -1597,9 +1566,9 @@ object Similarity {
     * assignment (spec'd).
     */
   def semDedupRemovalsTwoLevel(vectors: DataFrame, idCol: String, embCol: String,
-                               centroidPred: Column, threshold: Double,
-                               dims: Int = -1): DataFrame = {
-    val v = withNormFixed(vectors, idCol, embCol, dims)
+                               centroidPred: Column,
+                               threshold: Double): DataFrame = {
+    val v = withNormFixed(vectors, idCol, embCol)
     val cent = v.filter(centroidPred)
       .select(col("id").as("c_id"), col("emb").as("c_emb"),
         col("norm_f").as("c_norm"))
@@ -1616,25 +1585,25 @@ object Similarity {
     val wCg = Window.partitionBy("c_id").orderBy(desc("cg_cos"), asc("g_id"))
     val centGroup = cent.crossJoin(broadcast(coarse))
       .select(col("c_id"), col("c_emb"), col("c_norm"), col("g_id"),
-        cosineFromFixed(dotF(col("c_emb"), col("g_emb"), dims),
+        cosineFromFixed(dotFixed(col("c_emb"), col("g_emb")),
           col("c_norm"), col("g_norm")).as("cg_cos"))
       .withColumn("rn", row_number().over(wCg)).filter(col("rn") === 1)
       .select(col("c_id"), col("c_emb"), col("c_norm"), col("g_id"))
     val wVg = Window.partitionBy("id").orderBy(desc("vg_cos"), asc("g_id"))
     val vCoarse = v.crossJoin(broadcast(coarse))
       .select(col("id"), col("emb"), col("norm_f"), col("g_id"),
-        cosineFromFixed(dotF(col("emb"), col("g_emb"), dims),
+        cosineFromFixed(dotFixed(col("emb"), col("g_emb")),
           col("norm_f"), col("g_norm")).as("vg_cos"))
       .withColumn("rn", row_number().over(wVg)).filter(col("rn") === 1)
       .select(col("id"), col("emb"), col("norm_f"), col("g_id"))
     val wVc = Window.partitionBy("id").orderBy(desc("vc_cos"), asc("c_id"))
     val assigned = vCoarse.join(broadcast(centGroup), "g_id")
       .select(col("id"), col("emb"), col("norm_f"), col("c_id"),
-        cosineFromFixed(dotF(col("emb"), col("c_emb"), dims),
+        cosineFromFixed(dotFixed(col("emb"), col("c_emb")),
           col("norm_f"), col("c_norm")).as("vc_cos"))
       .withColumn("rn", row_number().over(wVc)).filter(col("rn") === 1)
       .select(col("id"), col("emb"), col("norm_f"), col("c_id").as("cluster"))
-    pruneWithinClusters(assigned, threshold, dims)
+    pruneWithinClusters(assigned, threshold)
   }
 
   /** Brute-force top-k cosine pairs as a hand-written kernel: vectors
@@ -1729,27 +1698,6 @@ object Similarity {
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select("qd", "rank", "cd", "score")
-  }
-
-  /** The e26 recall-evaluation shape: corpus-wide MaxSim truth AND the
-    * candidate-restricted ranking, derived from ONE shared
-    * per-(query-token, doc) max frame — the candidate scores are a
-    * strict subset of the truth leg's maxima, so re-scanning the corpus
-    * for the shortlist (a second [[maxSimTopKShortlist]] pass) computes
-    * nothing the truth pass didn't already hold. Returns
-    * (truth, shortlisted), each bit-identical to [[maxSimTopK]] /
-    * [[maxSimTopKShortlist]] run independently. Production serving runs
-    * [[maxSimTopKShortlist]] alone (e24); this shape exists only where
-    * BOTH rankings are wanted (recall evaluation).
-    */
-  def maxSimTopKWithShortlist(vectors: DataFrame, idCol: String, embCol: String,
-                              docMod: Long, numQueryDocs: Long,
-                              candidates: DataFrame, k: Int): (DataFrame, DataFrame) = {
-    val p = maxSimMaxFrame(vectors, idCol, embCol, docMod, numQueryDocs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (maxSimTopFromMax(p, k),
-      maxSimTopFromMax(
-        p.join(broadcast(candidates.select(col("qd"), col("cd"))), Seq("qd", "cd")), k))
   }
 
   /** The per-(query-token, doc) max frame (qd, qv, cd, m) both e26
@@ -1858,12 +1806,11 @@ object Similarity {
   /** Brute-force near-dup pairs: all i<j cosines (the LSH/IVF paths above
     * are the sub-quadratic alternative at scale).
     */
-  def cosinePairs(vectors: DataFrame, idCol: String, embCol: String,
-                  dims: Int = -1): DataFrame = {
-    val v = withNormFixed(vectors, idCol, embCol, dims)
+  def cosinePairs(vectors: DataFrame, idCol: String, embCol: String): DataFrame = {
+    val v = withNormFixed(vectors, idCol, embCol)
     v.as("a").join(v.as("b"), col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        cosineFromFixed(dotF(col("a.emb"), col("b.emb"), dims),
+        cosineFromFixed(dotFixed(col("a.emb"), col("b.emb")),
           col("a.norm_f"), col("b.norm_f")).as("cosine"))
   }
 }

@@ -461,12 +461,10 @@ object CurationQueries {
     Files.writeString(Paths.get(root, "config.json"), cfgJson)
     val summary = Pipeline.run(
       spark, root, Pipeline.loadConfig(s"$root/config.json"))
-    val statuses = summary.select("stage", "status", "seconds").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
-    if (sys.env.contains("GRAFT_PL02_DEBUG"))
-      statuses.foreach(s => println(f"[pl02] ${s._1}%-36s ${s._3}%6.2fs"))
+    val statuses = summary.select("stage", "status").collect()
+      .map(r => (r.getString(0), r.getString(1)))
     require(statuses.forall(_._2 == "ok"),
-      s"pl02 stages not ok: ${statuses.map(s => (s._1, s._2)).mkString(", ")}")
+      s"pl02 stages not ok: ${statuses.mkString(", ")}")
     val pre = CsvIo.readPreprocessed(spark, s"$root/posts_preprocessed.csv")
     val labels = spark.read.option("header", "true")
       .csv(s"$root/image_labels.csv").select("image", "category")

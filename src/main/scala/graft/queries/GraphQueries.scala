@@ -156,7 +156,7 @@ object GraphQueries {
     // — the former oe ⋈ adj(a) join and oe's persist are gone (oe now
     // has ONE consumer, the adj agg). Persists: 4 → 3. The counting
     // unions STAY three scans of the persisted withCommon: folding them
-    // into one concat+explode pass was A/B'd at the 100× tier (G04AB,
+    // into one concat+explode pass was A/B'd at the 100× tier (OPTIMIZATION_r14.md,
     // canary 0.205) and measured 13.4 vs 8.8 s — the per-row
     // struct-array construction costs more than two extra columnar
     // cache scans save; at gate SF the two forms are within 0.15 s.

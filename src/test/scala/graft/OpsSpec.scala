@@ -115,7 +115,7 @@ class OpsSpec extends SparkSpec {
     assert(out(2) == 3L)
   }
 
-  test("trainIvfCentroids converges on separated clusters; trained search stays in-cluster") {
+  test("trainIvfCentroids converges on separated clusters, identically across partitionings") {
     // three clusters hugging orthogonal axes, 8 vectors each
     val vecs = (0 until 24).map { i =>
       val axis = i % 3
@@ -135,11 +135,6 @@ class OpsSpec extends SparkSpec {
     val again = Similarity.trainIvfCentroids(vecs.repartition(5), "vid", "emb", 3, 3)
       .as[(Long, Seq[Float])].collect().toMap
     assert(again == cmap)
-    // trained-centroid search: neighbors of vector 0 (axis 0) are axis-0
-    val out = Similarity.knnIvfTrained(vecs, "vid", "emb", cent,
-      col("id") === 0L, k = 3, nprobe = 1)
-    val ids = out.select("n_id").as[Long].collect().toSet
-    assert(ids.nonEmpty && ids.forall(_ % 3 == 0))
   }
 
   test("cosinePairsTopK fails fast above the driver-collect bound") {
@@ -571,17 +566,16 @@ class OpsSpec extends SparkSpec {
     assert(strat == a)
   }
 
-  test("dotFixedUnrolled equals the native and HOF dot forms at small dims") {
+  test("dotFixed equals the HOF dot form at small dims") {
     val vecs = Seq(
       (1L, Seq(0.5f, -1.25f, 2.0f, 0.125f), Seq(1.0f, 0.5f, -0.75f, 2.5f)),
       (2L, Seq(0.0f, 0.0f, 0.0f, 0.0f), Seq(1.0f, 1.0f, 1.0f, 1.0f)))
       .toDF("id", "a", "b")
     val got = vecs.select(
       Similarity.dotFixed(col("a"), col("b")).as("native"),
-      Similarity.dotFixedHof(col("a"), col("b")).as("hof"),
-      Similarity.dotFixedUnrolled(col("a"), col("b"), 4).as("unrolled"))
-      .as[(Long, Long, Long)].collect()
-    got.foreach { case (n, h, u) => assert(n == h && h == u, s"($n, $h, $u)") }
+      Similarity.dotFixedHof(col("a"), col("b")).as("hof"))
+      .as[(Long, Long)].collect()
+    got.foreach { case (n, h) => assert(n == h, s"($n, $h)") }
   }
 
   test("GraftQuery.unchecked registers an oracle-less query (the weaker rows-only path)") {

@@ -1,7 +1,11 @@
 #!/usr/bin/env bash
 # Fast runner: java against sbt-compiled classes + the Spark jar dir,
-# mirroring build.sbt's JDK17 module options. Usage:
+# mirroring build.sbt's JDK17 module options. Recompile first (sbt
+# -batch compile) or it runs stale classes. The mains: graft.Verify,
+# graft.Bench, graft.RunPipeline, graft.Probe, graft.PlanDump,
+# graft.ScaleData, graft.ScaleBench. Usage:
 #   tools/run.sh graft.Verify /root/testdata/sf0.001 /tmp/verify
+#   tools/run.sh graft.Probe <time|jobs|phases|plan> <gate> [gate...]
 #   tools/run.sh test            # dispatches to sbt -batch test
 set -euo pipefail
 cd "$(dirname "$0")/.."
